@@ -35,7 +35,7 @@ object Bench {
       sum(when(!col("valid"), 1L).otherwise(0L)).as("invalid"),
       sum(size(col("violations"))).as("violations"))
     val row = agg.collect()(0)
-    // uniqueness (salted) — part of the suite
+    // uniqueness (one partial-aggregate group-by) — part of the suite
     TableChecks.uniquenessViolations(df, Seq("clip_id")).count()
     row.getAs[Long]("rows")
   }

@@ -85,7 +85,7 @@ object SparkEntry {
         .orderBy("col_name")
     }),
 
-    // -- uniqueness violations via salted two-phase agg ------------------
+    // -- uniqueness violations via one partial-aggregate group-by --------
     "q_unique_events_user" -> ((s, dir) => {
       TableChecks.uniquenessViolations(t(s, dir, "events"), Seq("user_id"))
         .orderBy("user_id")

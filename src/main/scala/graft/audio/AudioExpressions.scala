@@ -145,6 +145,10 @@ object expressions {
   def expected_transcript(clipId: Column): Column =
     ColumnBridge.toCol(ExpectedTranscript(ColumnBridge.toExpr(clipId)))
 
+  /** Builder for [[PcmStats]]. The expression is non-deterministic (see
+    * there), and Spark rejects non-deterministic expressions as aggregate
+    * arguments and in join conditions: project it to a column first, then
+    * use that column in `agg()` or a join. */
   def pcm_stats(bytes: Column, codec: Column): Column =
     ColumnBridge.toCol(PcmStats(ColumnBridge.toExpr(bytes), ColumnBridge.toExpr(codec)))
 }

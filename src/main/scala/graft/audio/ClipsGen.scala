@@ -9,8 +9,9 @@ case class Clip(clip_id: String, bytes: Array[Byte], sr_hz: Int,
 
 /** Deterministic synthetic clip-table generator (FIXTURES.md §1): seed
   * fixed, corruption classes injected at a configurable rate, one hot
-  * duplicate key to exercise salted-agg skew handling. Generation is a
-  * pure function of the row index ⇒ embarrassingly parallel, no shuffle.
+  * duplicate key to exercise the uniqueness check under key skew.
+  * Generation is a pure function of the row index ⇒ embarrassingly
+  * parallel, no shuffle.
   */
 object ClipsGen {
 

@@ -22,12 +22,7 @@ import org.apache.spark.sql.DataFrame
   * also pushes projections below Repartition for callers that pass the
   * raw frame). */
 object Spread {
-  // kill-switch for A/B measurement and for deployments whose inputs are
-  // always well-split (results are identical either way)
-  private val disabled = sys.env.contains("GRAFT_NO_SPREAD")
-
   def toCores(df: DataFrame): DataFrame = {
-    if (disabled) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }

@@ -50,10 +50,12 @@ final case class ValidationPlan(checks: Vector[Check],
 
   /** Annotation rows per input row — `Validator::iter_annotations`. */
   def iterAnnotations(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    // no size(...) pre-filter: explode drops empty arrays, and the filter
-    // would be pushed below the projection with the whole annotations
-    // expression duplicated into it (see violations())
-    df.select(keyCols.map(col) :+ annotationsCol.as("annotations"): _*)
+    // no size(...) pre-filter, and the same barrier as violations(): an
+    // explicit or inferred size(annotations) > 0 filter would otherwise be
+    // pushed below the projection with the whole annotations expression
+    // (sibling check predicates included) copied into it
+    df.select(keyCols.map(col) :+
+      graft.functions.OnceBarrier.once(annotationsCol).as("annotations"): _*)
       .select(keyCols.map(col) :+ explode(col("annotations")).as("_ann"): _*)
       .select(keyCols.map(col) ++ Seq(
         col("_ann.keyword").as("keyword"),

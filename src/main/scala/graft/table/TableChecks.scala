@@ -1,14 +1,14 @@
 package graft.table
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Dataset-level checks — the north-rule lift of the reference's row-scoped
   * verdict semantics to table scope (SURVEY.md §2.6). Per-row keyword
   * semantics stay faithful to the reference; the distribution strategy
-  * (partial aggregation, salting, broadcast-vs-shuffle joins) is new
-  * architecture, designed for 10^12-row tables.
+  * (partial aggregation, broadcast-vs-shuffle joins) is new architecture,
+  * designed for 10^12-row tables.
   */
 object TableChecks {
 
@@ -45,21 +45,14 @@ object TableChecks {
   /** Keys violating a uniqueness constraint, with multiplicities — the
     * dataset-level `uniqueItems` (SURVEY §2.2 / north rule `clip_id`).
     *
-    * Two-phase salted aggregation: phase 1 groups on (key, salt) so a hot
-    * key fans out over `salt` reducers instead of one; phase 2 sums the
-    * partial counts per key. (Spark's hash aggregate already does map-side
-    * partial counts; the explicit salt additionally protects the reduce
-    * side when a single key's partials exceed one reducer's share at
-    * 10^12-row scale.) */
-  def uniquenessViolations(df: DataFrame, keys: Seq[String], saltBuckets: Int = 64): DataFrame = {
-    val salt = pmod(hash(spark_partition_id(), monotonically_increasing_id()), lit(saltBuckets)).as("_salt")
-    df.select(keys.map(col) :+ salt: _*)
-      .groupBy((keys :+ "_salt").map(col): _*)
-      .agg(count(lit(1)).as("_partial"))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("_partial")).as("cnt"))
+    * One group-by with a combinable `count`: the partial aggregate emits at
+    * most one row per key per map task (also after it falls back to
+    * sort-based aggregation), so a hot key's reduce-side input is bounded
+    * by the number of map tasks, whatever the key's frequency. */
+  def uniquenessViolations(df: DataFrame, keys: Seq[String]): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("cnt"))
       .where(col("cnt") > 1)
-  }
 
   /** All rows participating in a duplicate group (the "all duplicate ids,
     * not just counts" requirement). Broadcast the (small) violating-key set

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 import graft.run.Validation
 import graft.spec.{Interp, JsonValue, Spec}
@@ -82,5 +83,19 @@ class OutputV1Spec extends AnyFunSuite {
     // (annotations only from valid subschemas)
     val forInvalid = rows.filter(_.getInt(0) == -1).map(_.getAs[String]("keyword")).toSet
     assert(!forInvalid.contains("format"), forInvalid.toString)
+  }
+
+  test("iterAnnotations builds the annotations array once: no filter copies it") {
+    // without the barrier, InferFiltersFromGenerate adds size(annotations) > 0
+    // and pushdown inlines the whole annotations expression (sibling pattern
+    // check included) into a Filter below the projection
+    val frame = spark.range(20).select(col("id").cast("string").as("s"))
+    val plan = Validation.compile(
+      """{"properties":{"s":{"pattern":"^[0-9]+$","x-note":1}}}""", frame.schema)
+    val q = plan.iterAnnotations(frame, Seq("s"))
+    val opt = q.queryExecution.optimizedPlan
+    val copies = opt.collect { case f: Filter if f.condition.toString.contains("x-note") => f }
+    assert(copies.isEmpty, opt.toString)
+    assert(q.count() == 20)
   }
 }

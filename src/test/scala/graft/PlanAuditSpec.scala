@@ -50,11 +50,13 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(sPlan.contains("SortMergeJoin") || sPlan.contains("ShuffledHashJoin"), sPlan)
   }
 
-  test("salted uniqueness: two aggregation levels, partial aggregation present") {
+  test("uniqueness: one shuffle exchange on the key, fed by a partial count") {
     val q = TableChecks.uniquenessViolations(orders, Seq("o_custkey"))
     val plan = q.queryExecution.executedPlan.toString
-    // phase 1 (key, salt) agg + phase 2 (key) agg, each with partial_
-    assert("partial_".r.findAllIn(plan).size >= 2, plan)
+    val exchanges = "Exchange (\\w+)\\(([^,)]*)".r.findAllMatchIn(plan)
+      .map(m => (m.group(1), m.group(2).takeWhile(_ != '#'))).toSeq
+    assert(exchanges == Seq(("hashpartitioning", "o_custkey")), plan)
+    assert(plan.contains("partial_count"), plan)
   }
 
   test("validation predicates stay inside whole-stage codegen") {

@@ -2,11 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import graft.table.TableChecks
 
 case class KV(k: String, v: Long)
 
-class TableChecksSpec extends AnyFunSuite {
+class TableChecksSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -28,6 +30,19 @@ class TableChecksSpec extends AnyFunSuite {
     val dups = TableChecks.uniquenessViolations(df, Seq("k")).collect()
       .map(r => r.getString(0) -> r.getAs[Long]("cnt")).toMap
     assert(dups == Map("hot" -> 1000L, "a" -> 2L))
+  }
+
+  test("uniquenessViolations shuffles at most one record per key per input partition") {
+    // 1000 copies of one key over n map tasks: the partial count leaves
+    // one row per task, so the query's exchanges write <= n records in all
+    val n = 4
+    val df = spark.sparkContext.parallelize(Seq.fill(1000)(KV("hot", 1L)), n).toDF()
+    val q = TableChecks.uniquenessViolations(df, Seq("k"))
+    assert(q.collect().map(r => r.getString(0) -> r.getAs[Long]("cnt")).toSeq == Seq("hot" -> 1000L))
+    // executed plan, looking through the AQE query stages
+    val written = collect(q.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      .map(_.metrics("shuffleRecordsWritten").value)
+    assert(written.nonEmpty && written.sum <= n, s"shuffle records written per exchange: $written")
   }
 
   test("duplicateRows returns every row of each duplicate group") {
